@@ -13,7 +13,7 @@ final case class DedupTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // exact | exact_incremental | minhash | minhash_pairs | minhash_cc | minhash_cc_apply | containment_pairs | containment_stratified | weighted_pairs | knn | simhash | simhash_pairs | ngram_pairs | prefix_pairs | edit_pairs | jw_pairs | passages | keep_best | cluster_stats
+    method: String = "exact",
     idCol: String = "doc_id",
     textCol: String = "text",
     keys: Seq[String] = Nil,
@@ -22,7 +22,9 @@ final case class DedupTransformStage(
     // 0.7 for ngram_pairs) — a single stage-level default would silently
     // override the per-method documentation.
     threshold: Option[Double] = None,
-    minhashK: Int = 64,
+    // None -> 128 for containment_stratified (its level-2 recall is
+    // 1-(1-j)^k, so it spends a longer signature), 64 otherwise
+    minhashK: Option[Int] = None,
     bands: Int = 16,
     rows: Int = 4,
     shingleN: Int = 3,
@@ -50,6 +52,8 @@ final case class DedupTransformStage(
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
     val in = Views.resolve(inputView)
+    val sigK = minhashK.getOrElse(
+      if (method == "containment_stratified") 128 else 64)
     detail += "method" -> method
     detail += "inputView" -> inputView
     detail += "outputView" -> outputView
@@ -65,43 +69,42 @@ final case class DedupTransformStage(
         Dedup.exactIncremental(in,
           Dedup.digests(Views.resolve(seen), ks), ks, Seq(idCol))
       case "minhash" => Dedup.minhashApply(in, idCol, textCol,
-        minhashK, bands, rows, shingleN, threshold.getOrElse(0.9))
+        sigK, bands, rows, shingleN, threshold.getOrElse(0.9))
       case "minhash_pairs" => Dedup.minhashPairs(in, idCol, textCol,
-        minhashK, bands, rows, shingleN, threshold.getOrElse(0.9))
+        sigK, bands, rows, shingleN, threshold.getOrElse(0.9))
       // one-permutation signature (k-times-cheaper narrow pass)
       case "oph_pairs" => Dedup.minhashPairsOPH(in, idCol, textCol,
-        minhashK, bands, rows, shingleN, threshold.getOrElse(0.9))
+        sigK, bands, rows, shingleN, threshold.getOrElse(0.9))
       // the production dedup-cluster path: near-dup pairs grouped into
       // components, one canonical (min) id per cluster
       case "minhash_cc" => Dedup.connectedComponents(
         Dedup.minhashPairs(in, idCol, textCol,
-          minhashK, bands, rows, shingleN, threshold.getOrElse(0.9)),
+          sigK, bands, rows, shingleN, threshold.getOrElse(0.9)),
         maxIter, checkpointDir)
       // full production dedup: cluster, then keep one doc per cluster
       case "minhash_cc_apply" =>
         Dedup.ccApply(in,
           Dedup.connectedComponents(
             Dedup.minhashPairs(in, idCol, textCol,
-              minhashK, bands, rows, shingleN, threshold.getOrElse(0.9)),
+              sigK, bands, rows, shingleN, threshold.getOrElse(0.9)),
             maxIter, checkpointDir),
           idCol)
       // asymmetric containment over the same MinHash-LSH candidates
       case "containment_pairs" => Dedup.containmentPairs(in, idCol, textCol,
-        minhashK, bands, rows, shingleN, threshold.getOrElse(0.7))
+        sigK, bands, rows, shingleN, threshold.getOrElse(0.7))
       // tf-weighted multiset Jaccard (bag-of-words near-dup); the 0.5
       // fallback mirrors Dedup.weightedJaccardPairs' own default so
       // config users and API users get the same cut-off
       case "weighted_pairs" =>
-        Dedup.weightedJaccardPairs(in, idCol, textCol, minhashK, bands,
+        Dedup.weightedJaccardPairs(in, idCol, textCol, sigK, bands,
           rows, threshold.getOrElse(0.5), maxTf)
       // LSH-Ensemble stratified banding: the size-skew recall path
-      // (parser defaults minhashK to 128 for this method)
       case "containment_stratified" =>
-        Dedup.containmentPairsStratified(in, idCol, textCol, minhashK,
+        Dedup.containmentPairsStratified(in, idCol, textCol, sigK,
           shingleN, threshold.getOrElse(0.7), maxBucket)
       // text k-NN over the same candidates (window = k neighbors)
       case "knn" => Dedup.knnJaccard(in, idCol, textCol, window,
-        minhashK, bands, rows, shingleN)
+        sigK, bands, rows, shingleN)
       case "simhash"       => Dedup.simhashFingerprints(in, idCol, textCol)
       case "simhash_pairs" =>
         Dedup.simhashPairs(in, idCol, textCol, maxHamming, maxBucket)
@@ -126,7 +129,7 @@ final case class DedupTransformStage(
         val seen = seenView.getOrElse(throw new IllegalArgumentException(
           "dedup method 'minhash_incremental' requires 'seenView'"))
         Dedup.minhashIncrementalPairs(in, Views.resolve(seen), idCol,
-          textCol, minhashK, bands, rows, shingleN,
+          textCol, sigK, bands, rows, shingleN,
           threshold.getOrElse(0.9))
       // score-aware cluster collapse: keep the best-scoring doc per
       // component (componentsView = a connectedComponents output view)
@@ -151,7 +154,7 @@ final case class SimilarityTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // topk | maxsim | ann | ivf | kmeans | medoids | kcenter | neardup_pairs | standardize | quantize | project | semantic_dedup | hard_negatives | ann_recall | pca_cov | health | bitext | bitext_scalable | pq_topk | hamming_topk | hamming_pairs
+    method: String = "topk",
     queryView: Option[String] = None,
     k: Int = 5,
     threshold: Double = 0.95,
@@ -178,7 +181,7 @@ final case class SimilarityTransformStage(
     // ivf_write / ivf_query: the persisted cell-partitioned index dir
     indexDir: Option[String] = None,
     // ivf_write: writer options (the destructive confirm.truncate latch)
-    options: Map[String, String] = Map.empty,
+    params: Map[String, String] = Map.empty,
     // pair_quality: the ground-truth grouping column
     labelCol: String = "label",
     // pq_recall / opq_recall / ivf_pq_topk: PQ codebook training rounds
@@ -289,7 +292,7 @@ final case class SimilarityTransformStage(
         val dir = indexDir.getOrElse(throw new IllegalArgumentException(
           "similarity method 'ivf_write' requires 'indexDir'"))
         Similarity.ivfWrite(corpus, dir, centroidEvery, kmeansIters,
-          exactReplay, options)
+          exactReplay, params)
       // ... and query (probes = cells scanned per query)
       case "ivf_query" =>
         val dir = indexDir.getOrElse(throw new IllegalArgumentException(
@@ -312,7 +315,7 @@ final case class AsofJoinTransformStage(
     inputView: String, // left side
     rightView: String,
     outputView: String,
-    keys: Seq[String],
+    keys: Seq[String] = Nil,
     leftTime: String = "ts",
     rightTime: String = "ts",
     forward: Boolean = false,
@@ -342,7 +345,7 @@ final case class SaltedJoinTransformStage(
     inputView: String, // left (skewed) side
     rightView: String,
     outputView: String,
-    keys: Seq[String],
+    keys: Seq[String] = Nil,
     saltFactor: Int = 8)
     extends Stage {
 
@@ -393,7 +396,7 @@ final case class ContaminationTransformStage(
     inputView: String, // the corpus
     evalView: String,  // the eval suite (check) / reference corpus (novelty)
     outputView: String,
-    method: String = "check", // check | novelty | novelty_bloom
+    method: String = "check",
     idCol: String = "doc_id",
     textCol: String = "text",
     shingleN: Int = 3,
@@ -436,9 +439,9 @@ final case class ProfileTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    columns: Seq[String],
+    columns: Seq[String] = Nil, // empty -> all columns
     exact: Boolean = true,
-    method: String = "table", // table | histogram | bucketize | winsorize | outliers | outliers_mad | correlation | linear_fit | percentile_rank | benford | trimmed_mean | corpus_report
+    method: String = "table",
     valueCol: String = "value",
     idCol: String = "doc_id",
     binWidth: Double = 1.0,
@@ -496,7 +499,7 @@ final case class SampleTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // deterministic | stratified | per_stratum_head | shard_by_budget | upsample | weighted_topk | negative | shuffle | pack | rebalance | top_fraction | token_cap | systematic | ordinal | importance | rendezvous | pareto
+    method: String = "deterministic",
     idCol: String = "doc_id",
     rate: Double = 1.0,
     salt: String = "",
@@ -605,7 +608,7 @@ final case class TextAnalysisTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    analysis: String, // quality | quality_filter | normalize | chunk | tokens | langid | fingerprint | langdist | repetition | tfidf | quality_score | lm_score | dup_spans | keyness | head_coverage | entropy | bpe_pairs | pmi | blocklist | bpe_apply | bpe_fertility | boilerplate | ttr | chao1 | script_mix | distinct_n | vectorize
+    analysis: String = "quality",
     idCol: String = "doc_id",
     textCol: String = "text",
     langCol: String = "lang",
@@ -810,7 +813,7 @@ final case class AssembleTransformStage(
     inputView: String,
     outputView: String,
     groupCol: String,
-    orderCols: Seq[String],
+    orderCols: Seq[String] = Nil,
     payloadCol: String,
     maxTurns: Int = 16)
     extends Stage {
@@ -834,7 +837,7 @@ final case class RetrievalTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // index | bm25 | rrf | rank_eval
+    method: String = "index",
     idCol: String = "doc_id",
     textCol: String = "text",
     minDf: Long = 1L,
@@ -903,7 +906,7 @@ final case class PiiTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // stats | scrub | kanon | suppress | noisy_counts | ldiversity | tcloseness | pseudonymize | pseudonym_audit
+    method: String = "stats",
     idCol: String = "doc_id",
     textCol: String = "text",
     // kanon / suppress / ldiversity: the quasi-identifier columns;
@@ -972,7 +975,7 @@ final case class ClassifyTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // train_score | auc | confusion | calibration | agreement | mcnemar | conformal
+    method: String = "train_score",
     idCol: String = "doc_id",
     textCol: String = "text",
     // train_score: SQL boolean expression labeling the positive class
@@ -1036,7 +1039,7 @@ final case class GraphTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String = "pagerank", // pagerank | triangles | cooccur_edges | kcore | lpa | link_pred | ppr | cc | scc | topo_layers | ball | harmonic | nf | walks | clustering | reciprocity | degree_alpha | modularity | assortativity
+    method: String = "pagerank",
     srcCol: String = "src",
     dstCol: String = "dst",
     iters: Int = 3,
@@ -1279,8 +1282,8 @@ final case class EncodeTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    columns: Seq[String],
-    method: String = "encode", // encode | vocab | target_loo | woe
+    columns: Seq[String] = Nil,
+    method: String = "encode",
     idCol: String = "doc_id",
     targetCol: String = "label",
     maxVocab: Long = 1000000L,
@@ -1318,7 +1321,7 @@ final case class SketchTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // hll | kmv | cms | hll_intersect | hll_rolling | kmv_jaccard | kmv_diff | join_size
+    method: String = "hll",
     keyCol: String,
     groupCols: Seq[String] = Nil,
     m: Int = 512,
@@ -1406,7 +1409,7 @@ final case class UrlTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // normalize | domain_mix | domain_quality | domain_filter
+    method: String = "normalize",
     urlCol: String = "url",
     tokenCol: String = "n_tokens",
     goodCol: String = "good",
@@ -1437,7 +1440,7 @@ final case class MultimodalTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // attach | meta | validate | decode | frames | resize | features | phash | phash_pairs
+    method: String = "meta",
     idCol: String = "doc_id",
     textCol: String = "text",
     formatCol: Option[String] = None,
@@ -1481,7 +1484,7 @@ final case class CdcTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // upsert | scd2 | derive | changed_keys
+    method: String = "upsert",
     changesView: Option[String] = None,
     nextView: Option[String] = None,
     keyCol: String = "id",
@@ -1528,7 +1531,7 @@ final case class GapfillTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String = "gapfill", // gapfill | cusum | utilization | seasonal | ewma | holt | changepoint | forecast_eval
+    method: String = "gapfill",
     tsCol: String = "ts",
     keyCol: String,
     idCol: String = "event_id",
@@ -1615,7 +1618,7 @@ final case class ZorderTransformStage(
     outputView: String,
     cols: Seq[String],
     idCol: String,
-    method: String = "manifest", // manifest | write | hilbert_manifest | hilbert_write
+    method: String = "manifest",
     outputDir: Option[String] = None,
     blockSize: Long = 4096L,
     bits: Int = 16,
@@ -1678,7 +1681,7 @@ final case class BehaviorTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // funnel | cohort | transitions | attribution | attribution_decay | basket | rate_cap | debounce | throttle | survival
+    method: String = "funnel",
     tsCol: String = "ts",
     userCol: String = "user_id",
     typeCol: String = "event_type",
@@ -1758,7 +1761,7 @@ final case class DataQualityTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // rules | linkage | join_skew | referential | fd | impute | reconcile
+    method: String = "rules",
     rules: Seq[(String, String)] = Nil,
     idCol: String = "id",
     blockCol: String = "block",
@@ -1837,8 +1840,8 @@ final case class AggStateTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // state | merge
-    keys: Seq[String],
+    method: String = "state",
+    keys: Seq[String] = Nil,
     sumCols: Seq[String] = Nil,
     stateViews: Seq[String] = Nil)
     extends Stage {
@@ -1884,9 +1887,10 @@ final case class AggStateTransformStage(
 final case class DriftTransformStage(
     name: String,
     inputView: String,
-    rightView: String,
+    // the after side; unused by the single-view methods
+    rightView: String = "",
     outputView: String,
-    method: String, // ks | tv | centroid | profile | permutation | cuped | srm | heavy_terms | bh | bootstrap | mannwhitney | chi2 | spearman | wilcoxon | kruskal | anova | levene | welch | fisher | proportions | segments | psi | jsd | wasserstein | ks_grouped | wasserstein_grouped | bootstrap_lift | sequential | welch_segments | sequential_mean | ratio_delta | tost | power | yuen | cmh | did
+    method: String = "ks",
     valueCol: String = "value",
     catCol: String = "category",
     labelCol: String = "label",
@@ -2065,7 +2069,7 @@ final case class SnapshotStage(
     name: String,
     baseDir: String,
     outputView: String,
-    method: String, // publish | read | vacuum
+    method: String,
     inputView: Option[String] = None,
     version: Option[Long] = None,
     keepLast: Int = 1,

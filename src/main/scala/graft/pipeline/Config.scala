@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import scala.collection.mutable.ListBuffer
+import scala.collection.mutable
 
 /** One config problem; all problems for a stage are reported together.
   * (ref: CassandraExtract.scala:22-63 — typed getters + error ACCUMULATION,
@@ -14,39 +14,51 @@ final case class ConfigError(key: String, message: String) {
   *
   * Usage: read every field (each read records errors instead of throwing),
   * then call `result(...)` — `Right(stage)` only if zero errors accumulated.
+  * Every getter also records the key it was asked for, so the keys a
+  * stage accepts are exactly the keys its factory reads
+  * ([[rejectUnasked]]).
   */
 final class ConfigReader(conf: Map[String, Any]) {
-  private val errors = ListBuffer.empty[ConfigError]
+  private val errors = mutable.ListBuffer.empty[ConfigError]
+  private val asked = mutable.Set.empty[String]
 
   def error(key: String, message: String): Unit =
     errors += ConfigError(key, message)
 
-  /** Reject unknown keys (typo guard; ref: checkValidKeys,
-    * CassandraExtract.scala:33).
-    */
-  def checkValidKeys(valid: Set[String]): Unit =
-    (conf.keySet -- valid).toSeq.sorted.foreach { k =>
-      errors += ConfigError(k, s"unknown option; expected one of ${valid.toSeq.sorted.mkString(", ")}")
-    }
+  /** Whether the config sets `key`; a presence test, not a read. */
+  def has(key: String): Boolean = conf.contains(key)
 
-  private def get[T](key: String, typeName: String)(pf: PartialFunction[Any, T]): Option[T] =
+  /** Reject every key no getter asked for (typo guard; ref:
+    * checkValidKeys, CassandraExtract.scala:33). Call once the stage's
+    * factory has read its config; `common` are keys valid on any stage.
+    */
+  def rejectUnasked(common: Set[String]): Unit = {
+    val valid = (asked ++ common).toSeq.sorted
+    (conf.keySet -- valid).toSeq.sorted.foreach { k =>
+      error(k, s"unknown option; expected one of ${valid.mkString(", ")}")
+    }
+  }
+
+  private def get[T](key: String, typeName: String)(pf: PartialFunction[Any, T]): Option[T] = {
+    asked += key
     conf.get(key) match {
       case None => None
       case Some(v) =>
         pf.lift(v) match {
           case some @ Some(_) => some
           case None =>
-            errors += ConfigError(key, s"expected $typeName, got ${String.valueOf(v)}")
+            error(key, s"expected $typeName, got ${String.valueOf(v)}")
             None
         }
     }
+  }
 
   def string(key: String): Option[String] =
     get(key, "string") { case s: String => s }
 
   def requiredString(key: String): String =
     string(key).getOrElse {
-      if (!conf.contains(key)) errors += ConfigError(key, "missing required option")
+      if (!has(key)) error(key, "missing required option")
       ""
     }
 
@@ -68,8 +80,8 @@ final class ConfigReader(conf: Map[String, Any]) {
       case b: BigInt if b.isValidLong => b.toLong
     }
 
-  def boolean(key: String, default: Boolean): Boolean =
-    get(key, "boolean") { case b: Boolean => b }.getOrElse(default)
+  def boolean(key: String): Option[Boolean] =
+    get(key, "boolean") { case b: Boolean => b }
 
   def double(key: String): Option[Double] =
     get(key, "number") {
@@ -80,32 +92,47 @@ final class ConfigReader(conf: Map[String, Any]) {
       case b: BigDecimal  => b.toDouble
     }
 
-  def stringList(key: String): Seq[String] =
+  def list(key: String): Option[Seq[String]] =
     get(key, "list of strings") {
       case xs: Seq[_] if xs.forall(_.isInstanceOf[String]) =>
         xs.asInstanceOf[Seq[String]]
-    }.getOrElse(Nil)
+    }
+
+  def stringList(key: String): Seq[String] = list(key).getOrElse(Nil)
 
   /** Enum-style validated string (ref: saveMode validValues,
-    * CassandraLoad.scala:35).
+    * CassandraLoad.scala:35); an invalid value is an error and reads as
+    * absent.
     */
-  def oneOf(key: String, valid: Seq[String], default: String): String =
-    string(key) match {
-      case Some(s) if valid.contains(s) => s
-      case Some(s) =>
-        errors += ConfigError(key, s"invalid value '$s'; expected one of ${valid.mkString(", ")}")
-        default
-      case None => default
+  def oneOf(key: String, valid: Seq[String]): Option[String] =
+    string(key).filter { s =>
+      valid.contains(s) || {
+        error(key, s"invalid value '$s'; expected one of ${valid.mkString(", ")}")
+        false
+      }
     }
 
   /** Free-form string→string map passed through to the connector
     * (ref: params pass-through, CassandraExtract.scala:96).
     */
-  def stringMap(key: String): Map[String, String] =
+  def map(key: String): Option[Map[String, String]] =
     get(key, "object of strings") {
       case m: Map[_, _] =>
         m.map { case (k, v) => String.valueOf(k) -> String.valueOf(v) }
-    }.getOrElse(Map.empty)
+    }
+
+  def stringMap(key: String): Map[String, String] = map(key).getOrElse(Map.empty)
+
+  /** A map of named numbers (weights, rates); a value that is not a
+    * number is an error naming its entry.
+    */
+  def numberMap(key: String): Option[Map[String, Double]] =
+    map(key).map(_.map { case (k, v) =>
+      k -> (try v.toDouble catch {
+        case _: NumberFormatException =>
+          error(key, s"value for '$k' is not a number: '$v'"); 0.0
+      })
+    })
 
   def result[T](value: => T): Either[List[ConfigError], T] =
     if (errors.isEmpty) Right(value) else Left(errors.toList)

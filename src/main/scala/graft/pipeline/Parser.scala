@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.connect.Connector
 import graft.ops._
+import graft.pipeline.Binder.bind
 import org.apache.spark.sql.SaveMode
 
 /** Pipeline-config parser: a config document → validated `Pipeline`.
@@ -21,6 +22,10 @@ import org.apache.spark.sql.SaveMode
   * LINE of the offending key (`stages[2].saveMode: line 14: invalid
   * value ...` — ref parity: CassandraExtract.scala:59-62 reports HOCON
   * line numbers).
+  *
+  * A stage's config keys are its case class's constructor parameters
+  * ([[Binder]]): name, type and default are declared once, there. A key
+  * no factory reads is rejected as unknown.
   *
   * Storage is injected: `connectors` maps the config's `connection` name to
   * a [[graft.connect.Connector]] (parquet in CI, Cassandra in production).
@@ -136,7 +141,14 @@ object Parser {
       "manifest", "write", "hilbert_manifest", "hilbert_write", "delete"),
     "StreamingLoad" -> Seq("load", "ivf_append", "drift_append"))
 
-  /** Built-in stage registry; extensible like the reference's plugin list. */
+  private val SaveModes = Seq("Append", "ErrorIfExists", "Ignore", "Overwrite")
+
+  /** Built-in stage registry; extensible like the reference's plugin list.
+    * Most stage types bind straight from their case class
+    * ([[Binder.bind]]), with a check for the cross-field rules a parameter
+    * type cannot express; the factories written out by hand read keys that
+    * are not one-to-one with fields.
+    */
   val defaultRegistry: Map[String, StageFactory] = Map(
     "Extract" -> { (r, conns) =>
       ExtractStage(
@@ -146,7 +158,7 @@ object Parser {
         outputView = r.requiredString("outputView"),
         numPartitions = r.int("numPartitions"),
         partitionBy = r.stringList("partitionBy"),
-        persist = r.boolean("persist", default = false),
+        persist = r.boolean("persist").getOrElse(false),
         options = r.stringMap("params"))
     },
     "Load" -> { (r, conns) =>
@@ -156,7 +168,7 @@ object Parser {
         inputView = r.requiredString("inputView"),
         table = r.requiredString("table"),
         saveMode = SaveMode.valueOf(
-          r.oneOf("saveMode", Seq("Append", "ErrorIfExists", "Ignore", "Overwrite"), "Overwrite")),
+          r.oneOf("saveMode", SaveModes).getOrElse("Overwrite")),
         numPartitions = r.int("numPartitions"),
         partitionBy = r.stringList("partitionBy"),
         options = r.stringMap("params"))
@@ -169,7 +181,7 @@ object Parser {
         sqlParams = r.stringMap("sqlParams"),
         numPartitions = r.int("numPartitions"),
         partitionBy = r.stringList("partitionBy"),
-        persist = r.boolean("persist", default = false))
+        persist = r.boolean("persist").getOrElse(false))
     },
     "Execute" -> { (r, conns) =>
       ExecuteStage(
@@ -180,426 +192,53 @@ object Parser {
         params = r.stringMap("params"))
     },
     "TypingTransform" -> { (r, _) =>
+      val (inline, uri) = (r.string("schema"), r.string("schemaURI"))
       TypingTransformStage(
         name = r.requiredString("name"),
         inputView = r.requiredString("inputView"),
         outputView = r.requiredString("outputView"),
-        schemaJson = r.string("schema").getOrElse {
-          r.string("schemaURI") match {
-            case Some(uri) =>
-              try Statements.fromUri(uri)
-              catch {
-                case e: Exception =>
-                  r.error("schemaURI", s"cannot read '$uri': ${e.getMessage}"); "[]"
-              }
-            case None =>
-              r.error("schema", "one of 'schema' or 'schemaURI' is required"); "[]"
+        schemaJson = inline.orElse(uri.map { u =>
+          try Statements.fromUri(u)
+          catch {
+            case e: Exception =>
+              r.error("schemaURI", s"cannot read '$u': ${e.getMessage}"); "[]"
           }
+        }).getOrElse {
+          r.error("schema", "one of 'schema' or 'schemaURI' is required"); "[]"
         })
     },
-    "DedupTransform" -> { (r, _) =>
-      DedupTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = r.oneOf("method",
-          methodEnums("DedupTransform"),
-          "exact"),
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        textCol = r.string("textCol").getOrElse("text"),
-        keys = r.stringList("keys"),
-        blockCols = r.stringList("blockCols"),
-        // absent -> per-method library default (0.9 minhash, 0.7 ngram)
-        threshold = r.double("threshold"),
-        // stratified banding spends a longer signature by default (its
-        // level-2 recall is 1-(1-j)^k — the operator's documented knob)
-        minhashK = r.int("minhashK").getOrElse(
-          if (r.string("method").contains("containment_stratified")) 128
-          else 64),
-        bands = r.int("bands").getOrElse(16),
-        rows = r.int("rows").getOrElse(4),
-        shingleN = r.int("shingleN").getOrElse(3),
-        ngramN = r.int("ngramN").getOrElse(5),
-        bucketWidth = r.int("bucketWidth").getOrElse(50),
-        sampleMod = r.int("sampleMod").getOrElse(4),
-        maxHamming = r.int("maxHamming").getOrElse(3),
-        maxBucket = r.int("maxBucket").getOrElse(4096),
-        maxBlock = r.int("maxBlock").getOrElse(1024),
-        lshBands = r.int("lshBands").getOrElse(8),
-        maxIter = r.int("maxIter").getOrElse(25),
-        window = r.int("window").getOrElse(8),
-        maxDist = r.int("maxDist").getOrElse(5),
-        byDigest = r.boolean("byDigest", default = false),
-        checkpointDir = r.string("checkpointDir"),
-        seenView = r.string("seenView"),
-        maxTf = r.int("maxTf").getOrElse(16),
-        componentsView = r.string("componentsView"),
-        scoreCol = r.string("scoreCol").getOrElse("score"))
-    },
-    "SimilarityTransform" -> { (r, _) =>
-      SimilarityTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = r.oneOf("method",
-          methodEnums("SimilarityTransform"), "topk"),
-        queryView = r.string("queryView"),
-        k = r.int("k").getOrElse(5),
-        threshold = r.double("threshold").getOrElse(0.95),
-        centroidEvery = r.int("centroidEvery").getOrElse(100),
-        maxBucket = r.int("maxBucket").getOrElse(4096),
-        kmeansIters = r.int("kmeansIters").getOrElse(2),
-        // absent -> per-method library default (ann 64/16/4, neardup 64/8/8)
-        nBits = r.int("nBits"),
-        bands = r.int("bands"),
-        rows = r.int("rows"),
-        exactReplay = r.boolean("exactReplay", default = false),
-        probes = r.int("probes").getOrElse(1),
-        levels = r.int("levels").getOrElse(256),
-        inDim = r.int("inDim").getOrElse(64),
-        outDim = r.int("outDim").getOrElse(16),
-        minMargin = r.double("minMargin").getOrElse(0.01),
-        subspaces = r.int("subspaces").getOrElse(8),
-        indexDir = r.string("indexDir"),
-        labelCol = r.string("labelCol").getOrElse("label"),
-        options = r.stringMap("params"),
-        pqIters = r.int("pqIters").getOrElse(1))
-    },
-    "AsofJoinTransform" -> { (r, _) =>
-      AsofJoinTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        rightView = r.requiredString("rightView"),
-        outputView = r.requiredString("outputView"),
-        keys = {
-          val ks = r.stringList("keys")
-          if (ks.isEmpty) r.error("keys", "at least one join key is required")
-          ks
-        },
-        leftTime = r.string("leftTime").getOrElse("ts"),
-        rightTime = r.string("rightTime").getOrElse("ts"),
-        forward = r.boolean("forward", default = false),
-        nearest = r.boolean("nearest", default = false),
-        toleranceMicros = r.long("toleranceMicros").getOrElse(Long.MaxValue))
-    },
-    "SaltedJoinTransform" -> { (r, _) =>
-      SaltedJoinTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        rightView = r.requiredString("rightView"),
-        outputView = r.requiredString("outputView"),
-        keys = {
-          val ks = r.stringList("keys")
-          if (ks.isEmpty) r.error("keys", "at least one join key is required")
-          ks
-        },
-        saltFactor = r.int("saltFactor").getOrElse(8))
-    },
-    "RangeJoinTransform" -> { (r, _) =>
-      RangeJoinTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        rightView = r.requiredString("rightView"),
-        outputView = r.requiredString("outputView"),
-        leftTime = r.requiredString("leftTime"),
-        startCol = r.requiredString("startCol"),
-        endCol = r.requiredString("endCol"),
-        keys = r.stringList("keys"),
-        bucketSeconds = r.long("bucketSeconds").getOrElse(3600L),
-        leftEnd = r.string("leftEnd"))
-    },
-    "ContaminationTransform" -> { (r, _) =>
-      ContaminationTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        evalView = r.requiredString("evalView"),
-        outputView = r.requiredString("outputView"),
-        method = r.oneOf("method",
-          methodEnums("ContaminationTransform"), "check"),
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        textCol = r.string("textCol").getOrElse("text"),
-        shingleN = r.int("shingleN").getOrElse(3),
-        broadcastEval = r.boolean("broadcastEval", default = true),
-        mBits = r.int("mBits").getOrElse(1 << 20),
-        k = r.int("k").getOrElse(5))
-    },
-    "ProfileTransform" -> { (r, _) =>
-      val method = r.oneOf("method",
-        methodEnums("ProfileTransform"), "table")
-      // a group-keyed pass without byCols would only fail at runtime
-      // (require in the operator) — fail at parse instead
-      if ((method.startsWith("outliers") || method == "correlation"
-          || method == "linear_fit" || method == "gini"
-          || method == "percentile_rank" || method == "trimmed_mean")
-          && r.stringList("byCols").isEmpty)
-        r.error("byCols", s"missing or empty; $method requires group columns")
-      ProfileTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        columns = r.stringList("columns"), // empty -> all columns
-        exact = r.boolean("exact", default = true),
-        method = method,
-        valueCol = r.string("valueCol").getOrElse("value"),
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        binWidth = r.double("binWidth").getOrElse(1.0),
-        nBins = r.int("nBins").getOrElse(4),
-        pLo = r.double("pLo").getOrElse(0.05),
-        pHi = r.double("pHi").getOrElse(0.95),
-        byCols = r.stringList("byCols"),
-        sigma = r.double("sigma").getOrElse(3.0),
-        madK = r.double("madK").getOrElse(3.5),
-        xCol = r.string("xCol").getOrElse("x"),
-        yCol = r.string("yCol").getOrElse("y"),
-        textCol = r.string("textCol").getOrElse("text"),
-        langCol = r.string("langCol").getOrElse("lang"),
-        sourceCol = r.string("sourceCol").getOrElse("source"))
-    },
-    "RetrievalTransform" -> { (r, _) =>
-      val method = r.oneOf("method", methodEnums("RetrievalTransform"), "index")
-      val terms = r.stringList("queryTerms")
-      val rankViews = r.stringList("rankViews")
-      // bm25 without terms / rrf without lists would only surface at
-      // runtime — fail at parse
-      if ((method == "bm25" || method == "qld" || method == "rm3")
-          && terms.isEmpty)
-        r.error("queryTerms", s"missing or empty; $method requires query terms")
-      if (method == "rrf" && rankViews.isEmpty)
-        r.error("rankViews", "missing or empty; rrf requires ranked-list views")
-      if (method == "rank_eval" && r.string("qrelsView").isEmpty)
-        r.error("qrelsView", "missing; rank_eval requires a qrels view")
-      RetrievalTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = method,
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        textCol = r.string("textCol").getOrElse("text"),
-        minDf = r.long("minDf").getOrElse(1L),
-        queryTerms = terms,
-        k = r.int("k").getOrElse(10),
-        k1 = r.double("k1").getOrElse(1.2),
-        b = r.double("b").getOrElse(0.75),
-        rankViews = rankViews,
-        rrfK = r.int("rrfK").getOrElse(60),
-        qrelsView = r.string("qrelsView"),
-        mu = r.double("mu").getOrElse(2000.0),
-        fbDocs = r.int("fbDocs").getOrElse(5),
-        fbTerms = r.int("fbTerms").getOrElse(10))
-    },
-    "PiiTransform" -> { (r, _) =>
-      PiiTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = r.oneOf("method",
-          methodEnums("PiiTransform"),
-          "stats"),
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        textCol = r.string("textCol").getOrElse("text"),
-        cols = r.stringList("cols"),
-        k = r.long("k").getOrElse(8L),
-        scale = r.double("scale").getOrElse(1.0),
-        salt = r.string("salt").getOrElse(""),
-        sensitiveCol = r.string("sensitiveCol").getOrElse(""),
-        t = r.double("t").getOrElse(0.2),
-        pNum = r.long("pNum").getOrElse(3L),
-        pDen = r.long("pDen").getOrElse(4L))
-    },
-    "ClassifyTransform" -> { (r, _) =>
-      val method = r.oneOf("method",
-        methodEnums("ClassifyTransform"), "train_score")
-      if (method == "conformal" && r.string("rightView").isEmpty)
-        r.error("rightView", "missing; conformal needs the test view")
-      if (method == "krippendorff" && r.stringList("raterCols").size < 2)
-        r.error("raterCols", "missing or < 2; krippendorff needs raters")
-      ClassifyTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = method,
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        textCol = r.string("textCol").getOrElse("text"),
-        positiveExpr = r.string("positiveExpr").getOrElse(""),
-        buckets = r.int("buckets").getOrElse(128),
-        labelCol = r.string("labelCol").getOrElse("label"),
-        scoreCol = r.string("scoreCol").getOrElse("score"),
-        predCol = r.string("predCol").getOrElse("pred"),
-        binWidth = r.double("binWidth").getOrElse(1.0),
-        aCol = r.string("aCol").getOrElse("a"),
-        bCol = r.string("bCol").getOrElse("b"),
-        rightView = r.string("rightView").getOrElse(""),
-        yCol = r.string("yCol").getOrElse("y"),
-        yhatCol = r.string("yhatCol").getOrElse("yhat"),
-        alpha = r.double("alpha").getOrElse(0.1),
-        raterCols = r.stringList("raterCols"))
-    },
-    "GraphTransform" -> { (r, _) =>
-      GraphTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = r.oneOf("method",
-          methodEnums("GraphTransform"),
-          "pagerank"),
-        srcCol = r.string("srcCol").getOrElse("src"),
-        dstCol = r.string("dstCol").getOrElse("dst"),
-        iters = r.int("iters").getOrElse(3),
-        dampNum = r.long("dampNum").getOrElse(850L),
-        dampDen = r.long("dampDen").getOrElse(1000L),
-        groupCol = r.string("groupCol").getOrElse("g"),
-        nodeCol = r.string("nodeCol").getOrElse("n"),
-        maxGroup = r.int("maxGroup").getOrElse(256),
-        coreK = r.int("coreK").getOrElse(3),
-        seedPrefix = r.string("seedPrefix").getOrElse("s"),
-        assignView = r.string("assignView").getOrElse(""),
-        checkpointEvery = r.int("checkpointEvery").getOrElse(0),
-        maxOuter = r.int("maxOuter").getOrElse(12),
-        maxIter = r.int("maxIter").getOrElse(25),
-        salt = r.string("salt").getOrElse(""),
-        dMin = r.long("dMin").getOrElse(2L))
-    },
-    "BehaviorTransform" -> { (r, _) =>
-      val method = r.oneOf("method",
-        methodEnums("BehaviorTransform"), "funnel")
-      val steps = r.stringList("steps")
-      if (method == "funnel" && steps.size < 2)
-        r.error("steps", "funnel requires >= 2 steps")
-      BehaviorTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = method,
-        tsCol = r.string("tsCol").getOrElse("ts"),
-        userCol = r.string("userCol").getOrElse("user_id"),
-        typeCol = r.string("typeCol").getOrElse("event_type"),
-        idCol = r.string("idCol").getOrElse("event_id"),
-        valueCol = r.string("valueCol").getOrElse("value"),
-        steps = steps,
-        maxGapSeconds = r.long("maxGapSeconds"),
-        touchType = r.string("touchType").getOrElse("click"),
-        convType = r.string("convType").getOrElse("purchase"),
-        windowSeconds = r.long("windowSeconds").getOrElse(3600L),
-        basketCol = r.string("basketCol").getOrElse("basket"),
-        itemCol = r.string("itemCol").getOrElse("item"),
-        minSupport = r.long("minSupport").getOrElse(10L),
-        k = r.int("k").getOrElse(3),
-        durationCol = r.string("durationCol").getOrElse("duration"),
-        observedCol = r.string("observedCol").getOrElse("observed"),
-        halfLifeSeconds = r.long("halfLifeSeconds").getOrElse(900L))
-    },
-    "DataQualityTransform" -> { (r, _) =>
-      val method = r.oneOf("method",
-        methodEnums("DataQualityTransform"), "rules")
-      if (method == "rules" && r.stringMap("rules").isEmpty)
-        r.error("rules", "missing or empty; method 'rules' requires them")
-      if ((method == "join_skew" || method == "referential")
-          && r.string("rightView").isEmpty)
-        r.error("rightView", s"missing; $method requires a right view")
-      if (method == "fd" && r.stringList("lhs").isEmpty)
-        r.error("lhs", "missing or empty; method 'fd' requires determinant columns")
-      if (method == "impute" && r.stringList("lhs").isEmpty)
-        r.error("lhs", "missing or empty; method 'impute' requires group columns")
-      def weights(key: String): Seq[(String, Double)] =
-        r.stringMap(key).toSeq.sortBy(_._1).map { case (k, v) =>
-          k -> (try v.toDouble catch {
-            case _: NumberFormatException =>
-              r.error(key, s"weight for '$k' is not a number: '$v'"); 0.0
-          })
+    "ZorderTransform" -> { (r, _) =>
+      val method = r.oneOf("method", methodEnums("ZorderTransform")).getOrElse("manifest")
+      val outDir = r.string("outputDir")
+      if ((method == "write" || method == "delete") && outDir.isEmpty)
+        r.error("outputDir", s"missing; $method requires a target directory")
+      // dimensions: the N-column "cols" list (ZORDER BY parity) or the
+      // classic xCol/yCol pair — exactly one form. A targeted delete
+      // operates on the stored layout and needs no curve columns.
+      val colsList = r.stringList("cols")
+      if (colsList.nonEmpty && colsList.size < 2)
+        r.error("cols", s"need >= 2 columns to interleave, got ${colsList.size}")
+      val xy = Seq("xCol", "yCol").map(k => k -> r.string(k))
+      val dims =
+        if (method == "delete") Nil
+        else if (colsList.size >= 2) colsList
+        else xy.map { case (k, v) =>
+          v.getOrElse { if (!r.has(k)) r.error(k, "missing required option"); "" }
         }
-      DataQualityTransformStage(
+      ZorderTransformStage(
         name = r.requiredString("name"),
         inputView = r.requiredString("inputView"),
         outputView = r.requiredString("outputView"),
+        cols = dims,
+        idCol = r.requiredString("idCol"),
         method = method,
-        // sorted by rule name: config maps carry no order, and the
-        // report row order must be reproducible
-        rules = r.stringMap("rules").toSeq.sortBy(_._1),
-        idCol = r.string("idCol").getOrElse("id"),
-        blockCol = r.string("blockCol").getOrElse("block"),
-        fuzzyFields = weights("fuzzyFields"),
-        exactFields = weights("exactFields"),
-        minScore = r.double("minScore").getOrElse(0.9),
-        maxBlock = r.int("maxBlock").getOrElse(1024),
-        rightView = r.string("rightView"),
-        leftKey = r.string("leftKey").getOrElse("key"),
-        rightKey = r.string("rightKey").getOrElse("key"),
-        topK = r.int("topK").getOrElse(20),
-        lhs = r.stringList("lhs"),
-        rhsCol = r.string("rhsCol").getOrElse("v"))
-    },
-    "DriftTransform" -> { (r, _) =>
-      val driftMethod = r.oneOf("method",
-        methodEnums("DriftTransform"),
-        "ks")
-      val singleView = Set("cuped", "srm", "bh", "bootstrap", "chi2",
-        "spearman", "wilcoxon", "kruskal", "anova", "levene", "fisher",
-        "proportions", "segments", "sequential", "welch_segments",
-        "sequential_mean", "ratio_delta", "cmh", "did")
-        .contains(driftMethod)
-      val expected = r.stringMap("expected").map { case (arm, w) =>
-        arm -> (try w.toDouble catch {
-          case _: NumberFormatException =>
-            r.error("expected", s"weight for '$arm' is not a number: '$w'")
-            1.0
-        })
-      }
-      if (driftMethod == "srm" && expected.isEmpty)
-        r.error("expected", "missing; srm requires the designed arm weights")
-      if (Set("proportions", "segments", "sequential", "welch_segments",
-          "sequential_mean", "ratio_delta", "cmh", "did")
-          .contains(driftMethod)) {
-        if (r.string("armA").isEmpty)
-          r.error("armA", s"missing; $driftMethod requires both arm names")
-        if (r.string("armB").isEmpty)
-          r.error("armB", s"missing; $driftMethod requires both arm names")
-      }
-      if (driftMethod == "tost" && r.double("margin").isEmpty)
-        r.error("margin", "missing; tost requires the equivalence margin")
-      DriftTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        // cuped/srm are single-view; the two-sample methods need the
-        // after side
-        rightView = if (singleView) r.string("rightView").getOrElse("")
-        else r.requiredString("rightView"),
-        outputView = r.requiredString("outputView"),
-        method = driftMethod,
-        valueCol = r.string("valueCol").getOrElse("value"),
-        catCol = r.string("catCol").getOrElse("category"),
-        labelCol = r.string("labelCol").getOrElse("label"),
-        columns = r.stringList("columns"),
-        idCol = r.string("idCol").getOrElse("id"),
-        nPerms = r.int("nPerms").getOrElse(200),
-        salt = r.string("salt").getOrElse(""),
-        groupCol = r.string("groupCol").getOrElse("group"),
-        preCol = r.string("preCol").getOrElse("pre"),
-        postCol = r.string("postCol").getOrElse("post"),
-        expected = expected,
-        chi2Threshold = r.double("chi2Threshold").getOrElse(3.841),
-        textCol = r.string("textCol").getOrElse("text"),
-        k = r.int("k").getOrElse(25),
-        pCol = r.string("pCol").getOrElse("p"),
-        alpha = r.double("alpha").getOrElse(0.05),
-        successCol = r.string("successCol").getOrElse("success"),
-        armA = r.string("armA").getOrElse(""),
-        armB = r.string("armB").getOrElse(""),
-        segCol = r.string("segCol").getOrElse("segment"),
-        nBins = r.int("nBins").getOrElse(10),
-        lookCol = r.string("lookCol").getOrElse("look"),
-        tauSq = r.double("tauSq").getOrElse(0.01),
-        numCol = r.string("numCol").getOrElse("num"),
-        denCol = r.string("denCol").getOrElse("den"),
-        margin = r.double("margin").getOrElse(0.0),
-        powerTarget = r.double("powerTarget").getOrElse(0.8),
-        trim = r.double("trim").getOrElse(0.2),
-        periodCol = r.string("periodCol").getOrElse("period"),
-        prePeriod = r.string("prePeriod").getOrElse("pre"),
-        postPeriod = r.string("postPeriod").getOrElse("post"))
+        outputDir = outDir,
+        blockSize = r.long("blockSize").getOrElse(4096L),
+        bits = r.int("bits").getOrElse(16),
+        options = r.stringMap("params"))
     },
     "Snapshot" -> { (r, _) =>
-      val method = r.oneOf("method", methodEnums("Snapshot"),
-        "publish")
+      val method = r.oneOf("method", methodEnums("Snapshot")).getOrElse("publish")
       if (method == "publish" && r.string("inputView").isEmpty)
         r.error("inputView", "missing; snapshot publish requires it")
       SnapshotStage(
@@ -613,304 +252,8 @@ object Parser {
         confirmTruncate = r.string("confirm.truncate")
           .exists(_.equalsIgnoreCase("true")))
     },
-    "AggStateTransform" -> { (r, _) =>
-      val method = r.oneOf("method", methodEnums("AggStateTransform"), "state")
-      val keys = r.stringList("keys")
-      if (keys.isEmpty) r.error("keys", "missing or empty")
-      if (method == "state" && r.stringList("sumCols").isEmpty)
-        r.error("sumCols", "missing or empty; 'state' requires value columns")
-      AggStateTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = method,
-        keys = keys,
-        sumCols = r.stringList("sumCols"),
-        stateViews = r.stringList("stateViews"))
-    },
-    "BloomJoinTransform" -> { (r, _) =>
-      BloomJoinTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        rightView = r.requiredString("rightView"),
-        outputView = r.requiredString("outputView"),
-        leftKey = r.requiredString("leftKey"),
-        rightKey = r.requiredString("rightKey"),
-        mBits = r.int("mBits").getOrElse(1 << 23),
-        k = r.int("k").getOrElse(5))
-    },
-    "CompactFiles" -> { (r, _) =>
-      CompactFilesStage(
-        name = r.requiredString("name"),
-        inputDir = r.requiredString("inputDir"),
-        outputDir = r.requiredString("outputDir"),
-        outputView = r.requiredString("outputView"),
-        targetBytes = r.long("targetBytes").getOrElse(128L * 1024 * 1024))
-    },
-    "SampleTransform" -> { (r, _) =>
-      SampleTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = r.oneOf("method",
-          methodEnums("SampleTransform"),
-          "deterministic"),
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        rate = r.double("rate").getOrElse(1.0),
-        salt = r.string("salt").getOrElse(""),
-        stratumCol = r.string("stratumCol").getOrElse("lang"),
-        rates = r.stringMap("rates").map { case (k, v) =>
-          k -> (try v.toDouble catch {
-            case _: NumberFormatException =>
-              r.error("rates", s"rate for '$k' is not a number: '$v'"); 1.0
-          })
-        },
-        defaultRate = r.double("defaultRate").getOrElse(1.0),
-        tokenCol = r.string("tokenCol").getOrElse("n_tokens"),
-        budget = r.long("budget").getOrElse(1000000L),
-        k = r.int("k").getOrElse(100),
-        weightCol = r.string("weightCol").getOrElse("n_tokens"),
-        nBuckets = r.int("nBuckets").getOrElse(1024),
-        textCol = r.string("textCol").getOrElse("text"),
-        targetValue = r.string("targetValue").getOrElse("en"),
-        xCol = r.string("xCol").getOrElse("x"),
-        yCol = r.string("yCol").getOrElse("y"),
-        componentsView = r.string("componentsView"))
-    },
-    "TextAnalysisTransform" -> { (r, _) =>
-      TextAnalysisTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        analysis = r.oneOf("analysis",
-          methodEnums("TextAnalysisTransform"),
-          "quality"),
-        terms = r.stringList("terms"),
-        merges = r.stringList("merges"),
-        // sorted by metric name: config maps carry no order, and the
-        // linear accumulation order must be reproducible
-        scoreWeights = r.stringMap("scoreWeights").toSeq.sortBy(_._1).map {
-          case (k, v) => k -> (try v.toDouble catch {
-            case _: NumberFormatException =>
-              r.error("scoreWeights", s"weight for '$k' is not a number: '$v'"); 0.0
-          })
-        },
-        bias = r.double("bias").getOrElse(0.0),
-        scoreThreshold = r.double("scoreThreshold").getOrElse(0.5),
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        textCol = r.string("textCol").getOrElse("text"),
-        langCol = r.string("langCol").getOrElse("lang"),
-        minChars = r.long("minChars").getOrElse(50L),
-        maxChars = r.long("maxChars").getOrElse(100000L),
-        minWords = r.long("minWords").getOrElse(10L),
-        minTtr = r.double("minTtr").getOrElse(0.1),
-        minStopwordRatio = r.double("minStopwordRatio").getOrElse(0.0),
-        maxPunctRatio = r.double("maxPunctRatio").getOrElse(0.3),
-        chunkSize = r.int("chunkSize").getOrElse(64),
-        overlap = r.int("overlap").getOrElse(16),
-        ngramN = r.int("ngramN").getOrElse(2),
-        topK = r.int("topK").getOrElse(5),
-        zipfTopN = r.int("zipfTopN").getOrElse(1000),
-        groupCols = r.stringList("groupCols"),
-        alpha = r.double("alpha").getOrElse(0.1),
-        alpha0 = r.double("alpha0").getOrElse(100.0),
-        window = r.int("window").getOrElse(8),
-        minDocs = r.int("minDocs").getOrElse(2),
-        dim = r.int("dim").getOrElse(64),
-        rounds = r.int("rounds").getOrElse(4),
-        discount = r.double("discount").getOrElse(0.75),
-        minCount = r.long("minCount").getOrElse(1L),
-        depth = r.int("depth").getOrElse(1),
-        maxPieceLen = r.int("maxPieceLen").getOrElse(4),
-        vocabSize = r.int("vocabSize").getOrElse(64),
-        seedSize = r.int("seedSize").getOrElse(2048),
-        iters = r.int("iters").getOrElse(2),
-        vocab = r.stringMap("vocab").toSeq.sortBy(_._1).map { case (k, v) =>
-          k -> (try v.toDouble catch {
-            case _: NumberFormatException =>
-              r.error("vocab", s"logp for '$k' is not a number: '$v'"); 0.0
-          })
-        },
-        pieces = r.stringList("pieces"))
-    },
-    "AssembleTransform" -> { (r, _) =>
-      // ordering is the stage's determinism contract: an empty list would
-      // surface at runtime as an opaque AnalysisException from row_number
-      // over an unordered window — fail at config time instead
-      val orderCols = r.stringList("orderCols")
-      if (orderCols.isEmpty)
-        r.error("orderCols", "missing or empty; at least one ordering column is required")
-      AssembleTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        groupCol = r.requiredString("groupCol"),
-        orderCols = orderCols,
-        payloadCol = r.requiredString("payloadCol"),
-        maxTurns = r.int("maxTurns").getOrElse(16))
-    },
-    "EncodeTransform" -> { (r, _) =>
-      val method = r.oneOf("method", methodEnums("EncodeTransform"),
-        "encode")
-      if ((method == "vocab" || method == "target_loo" || method == "woe")
-          && r.stringList("columns").isEmpty)
-        r.error("columns", s"missing or empty; $method reads columns[0]")
-      EncodeTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        columns = r.stringList("columns"),
-        method = method,
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        targetCol = r.string("targetCol").getOrElse("label"),
-        maxVocab = r.long("maxVocab").getOrElse(1000000L),
-        alpha = r.double("alpha").getOrElse(0.5))
-    },
-    "SketchTransform" -> { (r, _) =>
-      val method = r.oneOf("method",
-        methodEnums("SketchTransform"), "hll")
-      // a grouped-HLL without groupCols would only surface at runtime
-      if ((method == "hll" || method == "hll_intersect")
-          && r.stringList("groupCols").isEmpty)
-        r.error("groupCols", s"missing or empty; $method requires group columns")
-      val otherView = r.string("otherView").getOrElse("")
-      if ((method == "hll_intersect" || method == "kmv_jaccard")
-          && otherView.isEmpty)
-        r.error("otherView", s"missing; $method needs the B-side view")
-      SketchTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = method,
-        keyCol = r.requiredString("keyCol"),
-        groupCols = r.stringList("groupCols"),
-        m = r.int("m").getOrElse(512),
-        k = r.int("k").getOrElse(256),
-        depth = r.int("depth").getOrElse(4),
-        width = r.int("width").getOrElse(256),
-        topN = r.int("topN").getOrElse(10),
-        otherView = otherView,
-        bucketCol = r.string("bucketCol").getOrElse("bucket"),
-        window = r.int("window").getOrElse(7),
-        otherKeyCol = r.string("otherKeyCol").getOrElse(""))
-    },
-    "MultimodalTransform" -> { (r, _) =>
-      MultimodalTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = r.oneOf("method",
-          methodEnums("MultimodalTransform"),
-          "meta"),
-        idCol = r.string("idCol").getOrElse("doc_id"),
-        textCol = r.string("textCol").getOrElse("text"),
-        formatCol = r.string("formatCol"),
-        metaCols = r.stringList("metaCols"),
-        everyN = r.int("everyN").getOrElse(2),
-        maxDim = r.int("maxDim").getOrElse(128),
-        maxHamming = r.int("maxHamming").getOrElse(3),
-        maxBucket = r.int("maxBucket").getOrElse(4096))
-    },
-    "UrlTransform" -> { (r, _) =>
-      UrlTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = r.oneOf("method",
-          methodEnums("UrlTransform"),
-          "normalize"),
-        urlCol = r.string("urlCol").getOrElse("url"),
-        tokenCol = r.string("tokenCol").getOrElse("n_tokens"),
-        goodCol = r.string("goodCol").getOrElse("good"),
-        minShrunk = r.double("minShrunk").getOrElse(0.5),
-        m = r.double("m").getOrElse(20.0))
-    },
-    "CdcTransform" -> { (r, _) =>
-      val method = r.oneOf("method",
-        methodEnums("CdcTransform"), "upsert")
-      val changes = r.string("changesView")
-      if (method == "upsert" && changes.isEmpty)
-        r.error("changesView", "missing; upsert requires a change-feed view")
-      val next = r.string("nextView")
-      if ((method == "derive" || method == "changed_keys") && next.isEmpty)
-        r.error("nextView", s"missing; $method requires the next-snapshot view")
-      CdcTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = method,
-        changesView = changes,
-        nextView = next,
-        keyCol = r.string("keyCol").getOrElse("id"),
-        keys = r.stringList("keys"),
-        versionCol = r.string("versionCol").getOrElse("version"),
-        opCol = r.string("opCol").getOrElse("op"),
-        tsCol = r.string("tsCol").getOrElse("ts"),
-        stateCol = r.string("stateCol").getOrElse("state"))
-    },
-    "GapfillTransform" -> { (r, _) =>
-      GapfillTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        method = r.oneOf("method",
-          methodEnums("GapfillTransform"),
-          "gapfill"),
-        tsCol = r.string("tsCol").getOrElse("ts"),
-        keyCol = r.requiredString("keyCol"),
-        idCol = r.string("idCol").getOrElse("event_id"),
-        valueCol = r.string("valueCol").getOrElse("value"),
-        target = r.double("target").getOrElse(0.0),
-        slack = r.double("slack").getOrElse(0.0),
-        threshold = r.double("threshold").getOrElse(1.0),
-        startCol = r.string("startCol").getOrElse("start_us"),
-        endCol = r.string("endCol").getOrElse("end_us"),
-        bucketSeconds = r.long("bucketSeconds").getOrElse(3600L),
-        alpha = r.double("alpha").getOrElse(0.25),
-        beta = r.double("beta").getOrElse(0.25),
-        ordCol = r.string("ordCol").getOrElse("ord"),
-        forecastCol = r.string("forecastCol").getOrElse("forecast"),
-        maxLag = r.int("maxLag").getOrElse(24),
-        windowSeconds = r.long("windowSeconds").getOrElse(3600L),
-        k = r.int("k").getOrElse(5),
-        madK = r.double("madK").getOrElse(3.5))
-    },
-    "ZorderTransform" -> { (r, _) =>
-      val method = r.oneOf("method", methodEnums("ZorderTransform"), "manifest")
-      val outDir = r.string("outputDir")
-      if ((method == "write" || method == "delete") && outDir.isEmpty)
-        r.error("outputDir", s"missing; $method requires a target directory")
-      // dimensions: the N-column "cols" list (ZORDER BY parity) or the
-      // classic xCol/yCol pair — exactly one form. A targeted delete
-      // operates on the stored layout and needs no curve columns.
-      val colsList = r.stringList("cols")
-      if (colsList.nonEmpty && colsList.size < 2)
-        r.error("cols", s"need >= 2 columns to interleave, got ${colsList.size}")
-      val dims =
-        if (method == "delete") Nil
-        else if (colsList.size >= 2) colsList
-        else Seq(r.requiredString("xCol"), r.requiredString("yCol"))
-      ZorderTransformStage(
-        name = r.requiredString("name"),
-        inputView = r.requiredString("inputView"),
-        outputView = r.requiredString("outputView"),
-        cols = dims,
-        idCol = r.requiredString("idCol"),
-        method = method,
-        outputDir = outDir,
-        blockSize = r.long("blockSize").getOrElse(4096L),
-        bits = r.int("bits").getOrElse(16),
-        options = r.stringMap("params"))
-    },
-    "StreamingExtract" -> { (r, _) =>
-      graft.streaming.StreamingExtractStage(
-        name = r.requiredString("name"),
-        inputDir = r.requiredString("inputDir"),
-        outputView = r.requiredString("outputView"),
-        maxFilesPerTrigger = r.int("maxFilesPerTrigger").getOrElse(1))
-    },
     "StreamingLoad" -> { (r, conns) =>
-      val method = r.oneOf("method", methodEnums("StreamingLoad"), "load")
+      val method = r.oneOf("method", methodEnums("StreamingLoad")).getOrElse("load")
       // the connection resolves only when method=load actually needs it
       // (ivf_append writes through the index path, not a connector)
       val conn =
@@ -932,14 +275,120 @@ object Parser {
         connector = conn,
         table = r.string("table").getOrElse(""),
         saveMode = SaveMode.valueOf(
-          r.oneOf("saveMode", Seq("Append", "ErrorIfExists", "Ignore", "Overwrite"), "Append")),
+          r.oneOf("saveMode", SaveModes).getOrElse("Append")),
         indexDir = r.string("indexDir").getOrElse(""),
         referenceView = r.string("referenceView").getOrElse(""),
         valueCol = r.string("valueCol").getOrElse("value"),
         nBins = r.int("nBins").getOrElse(10),
         storeDir = r.string("storeDir").getOrElse(""),
         options = r.stringMap("params"))
-    }
+    },
+    "DedupTransform" -> bind[DedupTransformStage](),
+    "SimilarityTransform" -> bind[SimilarityTransformStage](),
+    "AsofJoinTransform" -> bind[AsofJoinTransformStage] { (r, s) =>
+      if (s.keys.isEmpty) r.error("keys", "at least one join key is required")
+    },
+    "SaltedJoinTransform" -> bind[SaltedJoinTransformStage] { (r, s) =>
+      if (s.keys.isEmpty) r.error("keys", "at least one join key is required")
+    },
+    "RangeJoinTransform" -> bind[RangeJoinTransformStage](),
+    "ContaminationTransform" -> bind[ContaminationTransformStage](),
+    "ProfileTransform" -> bind[ProfileTransformStage] { (r, s) =>
+      // a group-keyed pass without byCols would only fail at runtime
+      // (require in the operator) — fail at parse instead
+      if ((s.method.startsWith("outliers") || Set("correlation", "linear_fit",
+          "gini", "percentile_rank", "trimmed_mean")(s.method)) && s.byCols.isEmpty)
+        r.error("byCols", s"missing or empty; ${s.method} requires group columns")
+    },
+    "RetrievalTransform" -> bind[RetrievalTransformStage] { (r, s) =>
+      // bm25 without terms / rrf without lists would only surface at
+      // runtime — fail at parse
+      if (Set("bm25", "qld", "rm3")(s.method) && s.queryTerms.isEmpty)
+        r.error("queryTerms", s"missing or empty; ${s.method} requires query terms")
+      if (s.method == "rrf" && s.rankViews.isEmpty)
+        r.error("rankViews", "missing or empty; rrf requires ranked-list views")
+      if (s.method == "rank_eval" && s.qrelsView.isEmpty)
+        r.error("qrelsView", "missing; rank_eval requires a qrels view")
+    },
+    "PiiTransform" -> bind[PiiTransformStage](),
+    "ClassifyTransform" -> bind[ClassifyTransformStage] { (r, s) =>
+      if (s.method == "conformal" && s.rightView.isEmpty)
+        r.error("rightView", "missing; conformal needs the test view")
+      if (s.method == "krippendorff" && s.raterCols.size < 2)
+        r.error("raterCols", "missing or < 2; krippendorff needs raters")
+    },
+    "GraphTransform" -> bind[GraphTransformStage](),
+    "BehaviorTransform" -> bind[BehaviorTransformStage] { (r, s) =>
+      if (s.method == "funnel" && s.steps.size < 2)
+        r.error("steps", "funnel requires >= 2 steps")
+    },
+    "DataQualityTransform" -> bind[DataQualityTransformStage] { (r, s) =>
+      if (s.method == "rules" && s.rules.isEmpty)
+        r.error("rules", "missing or empty; method 'rules' requires them")
+      if ((s.method == "join_skew" || s.method == "referential") && s.rightView.isEmpty)
+        r.error("rightView", s"missing; ${s.method} requires a right view")
+      if (s.method == "fd" && s.lhs.isEmpty)
+        r.error("lhs", "missing or empty; method 'fd' requires determinant columns")
+      if (s.method == "impute" && s.lhs.isEmpty)
+        r.error("lhs", "missing or empty; method 'impute' requires group columns")
+    },
+    "DriftTransform" -> bind[DriftTransformStage] { (r, s) =>
+      // cuped/srm and the other single-view methods ignore rightView; the
+      // two-sample methods need the after side
+      if (!Set("cuped", "srm", "bh", "bootstrap", "chi2", "spearman",
+          "wilcoxon", "kruskal", "anova", "levene", "fisher", "proportions",
+          "segments", "sequential", "welch_segments", "sequential_mean",
+          "ratio_delta", "cmh", "did")(s.method) && !r.has("rightView"))
+        r.error("rightView", "missing required option")
+      if (s.method == "srm" && s.expected.isEmpty)
+        r.error("expected", "missing; srm requires the designed arm weights")
+      if (Set("proportions", "segments", "sequential", "welch_segments",
+          "sequential_mean", "ratio_delta", "cmh", "did")(s.method)) {
+        if (s.armA.isEmpty)
+          r.error("armA", s"missing; ${s.method} requires both arm names")
+        if (s.armB.isEmpty)
+          r.error("armB", s"missing; ${s.method} requires both arm names")
+      }
+      if (s.method == "tost" && !r.has("margin"))
+        r.error("margin", "missing; tost requires the equivalence margin")
+    },
+    "AggStateTransform" -> bind[AggStateTransformStage] { (r, s) =>
+      if (s.keys.isEmpty) r.error("keys", "missing or empty")
+      if (s.method == "state" && s.sumCols.isEmpty)
+        r.error("sumCols", "missing or empty; 'state' requires value columns")
+    },
+    "BloomJoinTransform" -> bind[BloomJoinTransformStage](),
+    "CompactFiles" -> bind[CompactFilesStage](),
+    "SampleTransform" -> bind[SampleTransformStage](),
+    "TextAnalysisTransform" -> bind[TextAnalysisTransformStage](),
+    "AssembleTransform" -> bind[AssembleTransformStage] { (r, s) =>
+      // ordering is the stage's determinism contract: an empty list would
+      // surface at runtime as an opaque AnalysisException from row_number
+      // over an unordered window — fail at config time instead
+      if (s.orderCols.isEmpty)
+        r.error("orderCols", "missing or empty; at least one ordering column is required")
+    },
+    "EncodeTransform" -> bind[EncodeTransformStage] { (r, s) =>
+      if (Set("vocab", "target_loo", "woe")(s.method) && s.columns.isEmpty)
+        r.error("columns", s"missing or empty; ${s.method} reads columns[0]")
+    },
+    "SketchTransform" -> bind[SketchTransformStage] { (r, s) =>
+      // a grouped-HLL without groupCols would only surface at runtime
+      if ((s.method == "hll" || s.method == "hll_intersect") && s.groupCols.isEmpty)
+        r.error("groupCols", s"missing or empty; ${s.method} requires group columns")
+      if ((s.method == "hll_intersect" || s.method == "kmv_jaccard") && s.otherView.isEmpty)
+        r.error("otherView", s"missing; ${s.method} needs the B-side view")
+    },
+    "MultimodalTransform" -> bind[MultimodalTransformStage](),
+    "UrlTransform" -> bind[UrlTransformStage](),
+    "CdcTransform" -> bind[CdcTransformStage] { (r, s) =>
+      if (s.method == "upsert" && s.changesView.isEmpty)
+        r.error("changesView", "missing; upsert requires a change-feed view")
+      if ((s.method == "derive" || s.method == "changed_keys") && s.nextView.isEmpty)
+        r.error("nextView", s"missing; ${s.method} requires the next-snapshot view")
+    },
+    "GapfillTransform" -> bind[GapfillTransformStage](),
+    "StreamingExtract" -> bind[graft.streaming.StreamingExtractStage]()
   )
 
   /** Classpath-discovered [[StagePlugin]]s (ServiceLoader, ref parity:
@@ -984,15 +433,15 @@ object Parser {
     * parse contract is `Either`, not exceptions.
     */
   private def sqlOf(r: ConfigReader): String =
-    (r.string("sql"), r.string("inputURI")) match {
-      case (Some(s), _) => s
-      case (None, Some(uri)) =>
-        try Statements.fromUri(uri, r.stringMap("authentication"))
+    (r.string("sql"), r.string("inputURI"), r.stringMap("authentication")) match {
+      case (Some(s), _, _) => s
+      case (None, Some(uri), auth) =>
+        try Statements.fromUri(uri, auth)
         catch {
           case e: Exception =>
             r.error("inputURI", s"cannot read '$uri': ${e.getMessage}"); ""
         }
-      case (None, None) =>
+      case (None, None, _) =>
         r.error("sql", "one of 'sql' or 'inputURI' is required"); ""
     }
 
@@ -1008,117 +457,8 @@ object Parser {
     })
   }
 
+  /** Keys valid on every stage, whether or not its factory reads them. */
   private val commonKeys = Set("type", "name", "environments", "connection")
-  private val validKeys: Map[String, Set[String]] = Map(
-    "Extract" -> (commonKeys ++ Set("table", "outputView", "numPartitions", "partitionBy", "persist", "params")),
-    "Load" -> (commonKeys ++ Set("inputView", "table", "saveMode", "numPartitions", "partitionBy", "params")),
-    "SqlTransform" -> (commonKeys ++ Set("sql", "inputURI", "outputView", "sqlParams", "numPartitions", "partitionBy", "persist", "authentication")),
-    "Execute" -> (commonKeys ++ Set("sql", "inputURI", "sqlParams", "authentication", "params")),
-    "TypingTransform" -> (commonKeys ++ Set("inputView", "outputView", "schema", "schemaURI")),
-    "DedupTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "idCol", "textCol", "keys", "blockCols", "threshold", "minhashK", "bands",
-      "rows", "shingleN", "ngramN", "bucketWidth", "sampleMod", "maxHamming",
-      "maxBucket", "maxBlock", "lshBands", "maxIter", "window", "maxDist",
-      "byDigest", "checkpointDir", "seenView", "maxTf", "componentsView",
-      "scoreCol")),
-    "SimilarityTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "queryView", "k", "threshold", "centroidEvery", "maxBucket",
-      "kmeansIters", "nBits", "bands", "rows", "exactReplay", "probes",
-      "levels", "inDim", "outDim", "minMargin", "subspaces", "indexDir",
-      "params", "pqIters", "labelCol")),
-    "AsofJoinTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "keys", "leftTime", "rightTime", "forward", "nearest",
-      "toleranceMicros")),
-    "SaltedJoinTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "keys", "saltFactor")),
-    "RangeJoinTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "leftTime", "startCol", "endCol", "keys", "bucketSeconds",
-      "leftEnd")),
-    "ContaminationTransform" -> (commonKeys ++ Set("inputView", "evalView",
-      "outputView", "method", "idCol", "textCol", "shingleN",
-      "broadcastEval", "mBits", "k")),
-    "ProfileTransform" -> (commonKeys ++ Set("inputView", "outputView", "columns", "exact",
-      "method", "valueCol", "idCol", "binWidth", "nBins", "pLo", "pHi", "byCols",
-      "sigma", "madK", "xCol", "yCol", "textCol", "langCol", "sourceCol")),
-    "RetrievalTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "idCol", "textCol", "minDf", "queryTerms", "k", "k1", "b",
-      "rankViews", "rrfK", "qrelsView", "mu", "fbDocs", "fbTerms")),
-    "PiiTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "idCol", "textCol", "cols", "k", "scale", "salt", "sensitiveCol",
-      "t", "pNum", "pDen")),
-    "ClassifyTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "idCol", "textCol", "positiveExpr", "buckets", "labelCol",
-      "scoreCol", "predCol", "binWidth", "aCol", "bCol", "rightView",
-      "yCol", "yhatCol", "alpha", "raterCols")),
-    "GraphTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "srcCol", "dstCol", "iters", "dampNum", "dampDen",
-      "groupCol", "nodeCol", "maxGroup", "coreK", "seedPrefix",
-      "assignView", "checkpointEvery", "maxOuter", "maxIter", "salt",
-      "dMin")),
-    "BehaviorTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "tsCol", "userCol", "typeCol", "idCol", "valueCol",
-      "steps", "maxGapSeconds", "touchType", "convType", "windowSeconds",
-      "basketCol", "itemCol", "minSupport", "k", "durationCol",
-      "observedCol", "halfLifeSeconds")),
-    "DataQualityTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "rules", "idCol", "blockCol", "fuzzyFields", "exactFields",
-      "minScore", "maxBlock", "rightView", "leftKey", "rightKey", "topK",
-      "lhs", "rhsCol")),
-    "DriftTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "method", "valueCol", "catCol", "labelCol", "columns",
-      "idCol", "nPerms", "salt", "groupCol", "preCol", "postCol",
-      "expected", "chi2Threshold", "textCol", "k", "pCol", "alpha",
-      "successCol", "armA", "armB", "segCol", "nBins", "lookCol",
-      "tauSq", "numCol", "denCol", "margin", "powerTarget", "trim",
-      "periodCol", "prePeriod", "postPeriod")),
-    "Snapshot" -> (commonKeys ++ Set("baseDir", "outputView", "method",
-      "inputView", "version", "keepLast", "confirm.truncate")),
-    "AggStateTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "keys", "sumCols", "stateViews")),
-    "BloomJoinTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "leftKey", "rightKey", "mBits", "k")),
-    "CompactFiles" -> (commonKeys ++ Set("inputDir", "outputDir",
-      "outputView", "targetBytes")),
-    "SampleTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "idCol", "rate", "salt", "stratumCol", "rates", "defaultRate",
-      "tokenCol", "budget", "k", "weightCol", "nBuckets", "textCol",
-      "targetValue", "xCol", "yCol", "componentsView")),
-    "TextAnalysisTransform" -> (commonKeys ++ Set("inputView", "outputView", "analysis",
-      "idCol", "textCol", "langCol", "minChars", "maxChars", "minWords",
-      "minTtr", "minStopwordRatio", "maxPunctRatio", "chunkSize", "overlap",
-      "ngramN", "topK", "zipfTopN", "scoreWeights", "bias", "scoreThreshold",
-      "groupCols", "alpha", "alpha0", "terms", "merges", "window",
-      "minDocs", "dim", "rounds", "discount", "minCount", "maxPieceLen",
-      "vocabSize", "seedSize", "iters", "vocab", "pieces", "depth")),
-    "AssembleTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "groupCol", "orderCols", "payloadCol", "maxTurns")),
-    "EncodeTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "columns", "method", "idCol", "targetCol", "maxVocab", "alpha")),
-    "SketchTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "keyCol", "groupCols", "m", "k", "depth", "width", "topN",
-      "otherView", "bucketCol", "window", "otherKeyCol")),
-    "CdcTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "changesView", "nextView", "keyCol", "keys", "versionCol", "opCol",
-      "tsCol", "stateCol")),
-    "MultimodalTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "idCol", "textCol", "formatCol", "metaCols", "everyN",
-      "maxDim", "maxHamming", "maxBucket")),
-    "UrlTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "urlCol", "tokenCol", "goodCol", "minShrunk", "m")),
-    "GapfillTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "tsCol", "keyCol", "idCol", "valueCol", "target", "slack",
-      "threshold", "startCol", "endCol", "bucketSeconds", "alpha", "beta",
-      "ordCol", "forecastCol", "maxLag", "windowSeconds", "k", "madK")),
-    "ZorderTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "cols", "xCol", "yCol", "idCol", "method", "outputDir", "blockSize",
-      "bits", "params")),
-    "StreamingExtract" -> (commonKeys ++ Set("inputDir", "outputView",
-      "maxFilesPerTrigger")),
-    "StreamingLoad" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "checkpointDir", "table", "saveMode", "indexDir",
-      "referenceView", "valueCol", "nBins", "storeDir",
-      "params"))
-  )
 
   def parse(
       json: String,
@@ -1142,8 +482,6 @@ object Parser {
     // on collision (a plugin must not silently replace a contract stage)
     val plugins = discoveredPlugins()
     val fullRegistry = plugins.map(p => p.stageType -> p.factory).toMap ++ registry
-    val fullValidKeys = plugins.filter(_.validKeys.nonEmpty)
-      .map(p => p.stageType -> (commonKeys ++ p.validKeys)).toMap ++ validKeys
     val parsed = stageVals.zipWithIndex.map {
       case (m: Map[_, _], i) =>
         val conf = m.asInstanceOf[Map[String, Any]]
@@ -1154,9 +492,10 @@ object Parser {
             Left(List(at(s"stages[$i]", "type",
               s"unknown stage type '$tpe'; registered: ${fullRegistry.keySet.toSeq.sorted.mkString(", ")}")))
           case Some(factory) =>
-            fullValidKeys.get(tpe).foreach(r.checkValidKeys)
             val envs = r.stringList("environments")
             val stage = factory(r, connectors)
+            // the keys a stage accepts are the keys its factory read
+            r.rejectUnasked(commonKeys)
             r.result(StageDef(stage, envs)).left.map(_.map(e =>
               at(s"stages[$i]", e.key, e.message)))
         }

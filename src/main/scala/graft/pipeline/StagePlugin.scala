@@ -12,6 +12,11 @@ package graft.pipeline
   *
   * Built-ins win on a type-name collision — [[Parser.defaultRegistry]] is
   * the contract; a plugin cannot silently replace `Extract`.
+  *
+  * Plugin stages get the same unknown-key check as the built-ins: a key
+  * the factory does not read through its [[ConfigReader]] (beyond
+  * `type`/`name`/`environments`/`connection`) is a config error.
+  * [[Binder.bind]] builds a factory that reads every constructor parameter.
   */
 trait StagePlugin {
 
@@ -20,10 +25,4 @@ trait StagePlugin {
 
   /** Builds the stage from its validated config. */
   def factory: Parser.StageFactory
-
-  /** Config keys valid for this stage beyond the common ones
-    * (`type`/`name`/`environments`/`connection`). Empty set = skip the
-    * unknown-key check for this stage type.
-    */
-  def validKeys: Set[String] = Set.empty
 }

@@ -59,7 +59,7 @@ final case class StreamingLoadStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // load | ivf_append | drift_append
+    method: String,
     checkpointDir: String,
     connector: Option[Connector] = None,
     table: String = "",

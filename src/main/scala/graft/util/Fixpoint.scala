@@ -54,10 +54,10 @@ object Fixpoint {
     * scope out restores the original; a non-final exit re-installs the
     * remaining top scope's target, so overlapping scopes (nested on one
     * thread or concurrent across threads) never clobber the value the
-    * first scope in saw. Sessions compare by identity (SparkSession
-    * does not override equals).
+    * first scope in saw; a key that was unset before is unset again.
+    * Sessions compare by identity (SparkSession does not override equals).
     */
-  private final class ConfScopes(val original: String) {
+  private final class ConfScopes(val original: Option[String]) {
     val stack = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
     val values = new java.util.IdentityHashMap[AnyRef, String]()
   }
@@ -73,8 +73,8 @@ object Fixpoint {
       body: => T): T = {
     val token = new Object
     open.synchronized {
-      val sc = open.getOrElseUpdate((spark, key), new ConfScopes(
-        try spark.conf.get(key) catch { case _: Exception => "" }))
+      val sc = open.getOrElseUpdate((spark, key),
+        new ConfScopes(spark.conf.getOption(key)))
       sc.stack += token
       sc.values.put(token, value)
       spark.conf.set(key, value)
@@ -85,7 +85,10 @@ object Fixpoint {
       sc.values.remove(token)
       if (sc.stack.isEmpty) {
         open.remove((spark, key))
-        spark.conf.set(key, sc.original)
+        sc.original match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
+        }
       } else spark.conf.set(key, sc.values.get(sc.stack.last))
     }
   }

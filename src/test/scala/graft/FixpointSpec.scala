@@ -100,4 +100,14 @@ class FixpointSpec extends SparkSpec {
       assert(spark.conf.get(AqeKey) == "false")
     } finally spark.conf.set(AqeKey, "true")
   }
+
+  test("a key unset before the scope is unset again after it") {
+    val key = "spark.graft.test.unsetBeforeScope"
+    spark.conf.unset(key)
+    Fixpoint.withConf(spark, key, "on") {
+      assert(spark.conf.get(key) == "on")
+    }
+    assert(spark.conf.getOption(key).isEmpty,
+      s"restored as '${spark.conf.getOption(key).orNull}' instead of unset")
+  }
 }
